@@ -9,8 +9,8 @@ at logparser/c.py:5-60.
 The parser walks the raw call expression token-by-token:
 
 * ``_read_variable`` scans a (possibly dotted) expression; when it sees
-  ``name(`` where ``name`` maps to a known formatting function it re-lexes
-  the call from the '(' char to count arguments, trims the function's role
+  ``name(`` where ``name`` maps to a known formatting function it counts
+  the call's arguments on a fork of the token stream, trims the function's role
   template (['skip','str','...']-style) to that count, and descends into
   ``_parse_format``; otherwise brackets are tracked and the expression is
   returned as a plain variable.
@@ -292,10 +292,9 @@ def _read_variable(lexer: TokenStream, funcs: dict):
             prev_was_ident = False
             style, default_roles = _lookup_func(gathered[-1], funcs)
             if style in _PARSEABLE_STYLES:
-                # Re-lex from the '(' character to count this call's args
-                # (java.py:404-407) — char_pos sits just past the peeked '('.
-                sub = TokenStream(lexer.source[lexer.char_pos - 1:])
-                nargs = _count_call_args(sub)
+                # Count this call's args from the peeked '(' on a second
+                # cursor (java.py:404-407 re-lexes the rest of the source).
+                nargs = _count_call_args(lexer.fork())
                 roles = _trim_roles(default_roles, nargs)
                 message, variables = _parse_format_call(lexer, roles, funcs)
                 return "nested", message, variables

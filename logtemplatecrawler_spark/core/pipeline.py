@@ -2,8 +2,11 @@
 
 This is the sequential reference-semantics twin of the distributed plan in
 ``logtemplatecrawler_spark.plans.template_pipeline``: given one page (url,
-text, lang), produce the fully-processed template rows.  The e2e pytest
-asserts the Spark job's output equals this oracle applied page-by-page.
+text, lang), produce the fully-processed template rows.  The plan runs
+detect and framework natively, then ``statement_templates`` — the rest of
+``process_page`` — as its one Python stage, so the two share that code.
+The e2e pytest asserts the Spark job's output equals this oracle applied
+page-by-page.
 
 Stage order mirrors the reference DAG
 (/root/reference/dags/log2vec_process-repository.py:346-371):
@@ -15,7 +18,7 @@ whole corpus — see ``dedup_rows``.
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, List
+from typing import Dict, Iterable, List, Tuple
 from urllib.parse import urlparse
 
 from logtemplatecrawler_spark.core.detect import detect_page, page_framework
@@ -35,14 +38,14 @@ def url_file(url: str) -> str:
     return urlparse(url).path.lstrip("/")
 
 
-def process_page(url: str, text: str, lang: str) -> List[Dict]:
-    """All surviving template rows of one page, in statement order."""
-    hit, _ = detect_page(text, lang)
-    if not hit:
-        return []
-    framework = page_framework(text, lang)
-    out: List[Dict] = []
-    file_id = url_file(url)
+def statement_templates(
+    text: str, lang: str, framework: str
+) -> List[Tuple[int, str, str, List[str], str]]:
+    """The post-detect half of ``process_page``: every surviving statement
+    of one detected page as ``(stmt_idx, raw, parsed_template, arguments,
+    template)``, in statement order.  The Spark plan's one Python stage runs
+    exactly this function per page."""
+    out = []
     for stmt_idx, raw in enumerate(extract_statements(text, lang, framework)):
         if lang == "c":
             # CParser.run strips and drops preprocessor lines BEFORE the
@@ -64,7 +67,19 @@ def process_page(url: str, text: str, lang: str) -> List[Dict]:
             continue
         if len(template) == 0 or len(parsed_template) == 0:
             continue  # dags/log2vec_process-repository.py:287-294
-        out.append({
+        out.append((stmt_idx, raw, parsed_template, args, template))
+    return out
+
+
+def process_page(url: str, text: str, lang: str) -> List[Dict]:
+    """All surviving template rows of one page, in statement order."""
+    hit, _ = detect_page(text, lang)
+    if not hit:
+        return []
+    framework = page_framework(text, lang)
+    file_id = url_file(url)
+    return [
+        {
             "url": url,
             "file": file_id,
             "stmt_idx": stmt_idx,
@@ -73,8 +88,10 @@ def process_page(url: str, text: str, lang: str) -> List[Dict]:
             "parsed_template": parsed_template,
             "arguments": args,
             "template": template,
-        })
-    return out
+        }
+        for stmt_idx, raw, parsed_template, args, template
+        in statement_templates(text, lang, framework)
+    ]
 
 
 def dedup_rows(rows: Iterable[Dict]) -> List[Dict]:

@@ -17,45 +17,30 @@ Replicated QUIRKs:
   er, any next double quote", backslashes included verbatim.
 * the ``var`` character class (javatokenizer.py:13) is the complement of
   punc+ops, so identifiers absorb whitespace and quote chars mid-token
-  (``x  )`` → var token ``'x  '`` is impossible since ')' stops it, but
-  ``foo bar,`` lexes as one var token ``'foo bar'``).
-* unknown characters raise ValueError via ``croak`` (strstream.py:18-19).
+  (``foo bar,`` lexes as one var token ``'foo bar'``, ``x  )`` as ``'x  '``).
+  For the same reason the reference's ``croak`` on an unknown character
+  (strstream.py:18-19) is unreachable: every character starts some token.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Optional, Tuple
+from typing import List, Optional, Tuple
 
-_WS_RE = re.compile(r"\s")
-_OP_RE = re.compile(r"[+*|^/%=\&\-<>!]")
-_PUNC_RE = re.compile(r"[;,.(){}[\]]")
-_VAR_RE = re.compile(r"[^.+*|^/%=\&\-<>!;,(){}[\]]")
-_DIGIT_RE = re.compile(r"\d")
 _UNARY_RE = re.compile(r"^(\+\+|-|--|!)$")
 
-# Hot path: the lexer classifies every character, and a per-char re.search
-# is ~10× slower than set membership.  The ASCII classification tables are
-# derived FROM the regexes above (so they cannot drift); non-ASCII chars
-# fall back to the regex — behavior stays exactly equivalent.
-_WS_ASCII = frozenset(chr(c) for c in range(128) if _WS_RE.search(chr(c)))
-_OP_ASCII = frozenset(chr(c) for c in range(128) if _OP_RE.search(chr(c)))
-_PUNC_ASCII = frozenset(chr(c) for c in range(128) if _PUNC_RE.search(chr(c)))
-_VAR_ASCII = frozenset(chr(c) for c in range(128) if _VAR_RE.search(chr(c)))
-_DIGIT_ASCII = frozenset(chr(c) for c in range(128) if _DIGIT_RE.search(chr(c)))
-
-
-def _classify_sets(pattern: re.Pattern, ascii_set: frozenset):
-    def check(ch: str) -> bool:
-        return ch in ascii_set if ch < "\x80" else bool(pattern.search(ch))
-    return check
-
-
-_is_ws = _classify_sets(_WS_RE, _WS_ASCII)
-_is_op = _classify_sets(_OP_RE, _OP_ASCII)
-_is_punc = _classify_sets(_PUNC_RE, _PUNC_ASCII)
-_is_var = _classify_sets(_VAR_RE, _VAR_ASCII)
-_is_digit = _classify_sets(_DIGIT_RE, _DIGIT_ASCII)
+# One alternation lexes a whole statement, in the reference's priority order
+# (javatokenizer.py:80-96): str, punc, op, num, var.  Leading whitespace is
+# skipped first.  ``var`` may not START with whitespace: otherwise trailing
+# whitespace (e.g. '\u2028' after the last token) would backtrack out of the
+# skip and come back as a var token.  Mid-token it may, as in the reference.
+_TOKEN_RE = re.compile(
+    r'\s*(?:"(?P<str>[^"]*)"?'
+    r"|(?P<punc>[;,.(){}\[\]])"
+    r"|(?P<op>[+*|^/%=&\-<>!]+)"
+    r"|(?P<num>\d+)"
+    r"|(?P<var>[^\s.+*|^/%=&\-<>!;,(){}\[\]][^.+*|^/%=&\-<>!;,(){}\[\]]*))"
+)
 
 Token = Tuple[str, str]
 
@@ -65,77 +50,52 @@ def is_unary_op(tok: str) -> bool:
     return bool(_UNARY_RE.match(tok))
 
 
-class TokenStream:
-    """Pull lexer with one-token lookahead over a raw statement string.
+def _lex(source: str) -> List[Token]:
+    """Every token of ``source``, in order.  Only trailing whitespace stops
+    the match loop early: every other character starts some token."""
+    tokens: List[Token] = []
+    match = _TOKEN_RE.match
+    pos = 0
+    while True:
+        m = match(source, pos)
+        if m is None:
+            return tokens
+        kind = m.lastgroup
+        tokens.append((kind, m.group(kind)))
+        pos = m.end()
 
-    ``source``/``char_pos`` expose the underlying character cursor because the
-    parser re-lexes a sub-expression from the char position of a peeked '('
-    (logparser/java.py:404).
+
+class TokenStream:
+    """Cursor with one-token lookahead over a statement lexed once.
+
+    The parser counts a nested call's arguments from its '(' on a second
+    cursor (logparser/java.py:404); ``fork`` gives one over the same token
+    list instead of lexing the rest of the statement again.
     """
 
-    __slots__ = ("source", "char_pos", "_pending")
+    __slots__ = ("_tokens", "_pos")
 
     def __init__(self, source: str):
-        self.source = source
-        self.char_pos = 0
-        self._pending: Optional[Token] = None
+        self._tokens = _lex(source)
+        self._pos = 0
 
-    # -- char-level helpers -------------------------------------------------
-    def _char_eof(self) -> bool:
-        return self.char_pos >= len(self.source)
-
-    def _take_while(self, check) -> str:
-        start = self.char_pos
-        s = self.source
-        n = len(s)
-        pos = start
-        while pos < n and check(s[pos]):
-            pos += 1
-        self.char_pos = pos
-        return s[start:pos]
-
-    def _take_string_literal(self) -> str:
-        # Consume opening quote; read verbatim until the next '"' (escape
-        # handling never fires in the reference — see module QUIRKs).
-        self.char_pos += 1
-        s = self.source
-        end = s.find('"', self.char_pos)
-        if end < 0:
-            body = s[self.char_pos:]
-            self.char_pos = len(s)
-            return body
-        body = s[self.char_pos:end]
-        self.char_pos = end + 1
-        return body
-
-    # -- token-level interface ---------------------------------------------
-    def _lex(self) -> Optional[Token]:
-        self._take_while(_is_ws)
-        if self._char_eof():
-            return None
-        ch = self.source[self.char_pos]
-        if ch == '"':
-            return "str", self._take_string_literal()
-        if _is_punc(ch):
-            self.char_pos += 1
-            return "punc", ch
-        if _is_op(ch):
-            return "op", self._take_while(_is_op)
-        if _is_digit(ch):
-            return "num", self._take_while(_is_digit)
-        if _is_var(ch):
-            return "var", self._take_while(_is_var)
-        raise ValueError(f"Can't handle character {ch} [offset {self.char_pos}]")
+    def fork(self) -> "TokenStream":
+        """An independent cursor at the current (peeked) token."""
+        other = TokenStream.__new__(TokenStream)
+        other._tokens = self._tokens
+        other._pos = self._pos
+        return other
 
     def peek(self) -> Optional[Token]:
-        if not self._pending:
-            self._pending = self._lex()
-        return self._pending
+        if self._pos < len(self._tokens):
+            return self._tokens[self._pos]
+        return None
 
     def next(self) -> Optional[Token]:
-        tok = self._pending
-        self._pending = None
-        return tok or self._lex()
+        tok = self.peek()
+        if tok is not None:
+            self._pos += 1
+        return tok
 
     def eof(self) -> bool:
-        return self.peek() is None
+        return self._pos >= len(self._tokens)

@@ -6,9 +6,14 @@ to ``rlike``/``length``/``startswith`` expressions.  Each function's
 pure-Python twin lives in ``logtemplatecrawler_spark.core`` (same reference
 citations); parity is asserted by tests/test_spark_pipeline.py.
 
-Regex notes: Spark ``rlike`` is Java ``Matcher.find`` — equivalent to Python
+Regex notes: Spark ``rlike`` is Java ``Matcher.find``, close to Python
 ``re.search`` for these patterns (all are ASCII, no lookbehind; backreference
-``(.)\\1{5,}`` is supported by java.util.regex).
+``(.)\\1{5,}`` is supported by java.util.regex) but not identical: Java's
+``.`` also excludes ``\\r``, ``\\u0085``, ``\\u2028`` and ``\\u2029``, and its
+``\\s`` is ASCII-only.  That is why the statement-level filters
+(``normalize_raw`` … ``template_valid``) no longer run in the template
+pipeline — it applies their Python twins inside its one Python stage — and
+remain here for the harness queries and layer-by-layer profiling.
 """
 
 from __future__ import annotations

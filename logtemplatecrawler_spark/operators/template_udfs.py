@@ -1,28 +1,36 @@
-"""Vectorized Arrow pandas UDFs wrapping the core template pipeline.
+"""The template pipeline's Python stage, plus its two older Arrow UDFs.
 
-Only the genuinely procedural stages are UDFs (extract's backwards/forwards
-statement-boundary scan, the recursive parser, formalization); every
-filter/predicate around them is a native column expression
-(functions/columns.py) placed BEFORE the UDF so Catalyst never has to push
-a predicate through an opaque Python stage.
+``page_templates`` is the ONE Python crossing of ``extract_templates``: a
+``mapInArrow`` stage that takes detected pages (url, text, lang, framework)
+and emits finished statement rows.  Its body is
+``core.pipeline.statement_templates`` — extract, C strip + preprocessor
+drop, pre-filter, parse, validity, formalize, empty drop — the very code
+the pure-Python oracle runs, so Spark ≡ core holds by construction.  Only
+the native filters that prune the stage's *input* (detect, functions/
+columns.py) run before it; nothing native runs on its output except the
+``file`` column and the dedup windows.
+
+``extract_raws`` and ``parse_and_formalize`` are the earlier two-stage
+surface (extract UDF → posexplode → native filters → parse UDF).  No plan
+uses them; they stay importable for layer-by-layer profiling.
 
 Batch sizing: page bodies are large strings — callers should set
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` modestly (the session
 helper uses 256) so Arrow batches stay memory-friendly.
-
-UDF-count note: detect/framework are native (no UDF); extract runs per page;
-parse+formalize run per statement (post-explode, different cardinality) and
-are fused into ONE Python stage each to minimize Python-worker crossings.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Iterator, List, Optional
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
+    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -31,6 +39,46 @@ from pyspark.sql.types import (
 from logtemplatecrawler_spark.core.extract import extract_statements
 from logtemplatecrawler_spark.core.formalize import formalize_template
 from logtemplatecrawler_spark.core.parse import parse_statement
+from logtemplatecrawler_spark.core.pipeline import statement_templates
+
+STATEMENT_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), True),
+        StructField("framework", StringType(), True),
+        StructField("stmt_idx", IntegerType(), True),
+        StructField("raw", StringType(), True),
+        StructField("parsed_template", StringType(), True),
+        StructField("arguments", ArrayType(StringType()), True),
+        StructField("template", StringType(), True),
+    ]
+)
+_STATEMENT_ARROW = to_arrow_schema(STATEMENT_SCHEMA)
+
+
+def _statement_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Arrow batches of pages → Arrow batches of their statement rows."""
+    for batch in batches:
+        pages = zip(*(batch.column(n).to_pylist()
+                      for n in ("url", "text", "lang", "framework")))
+        rows = [
+            (url, framework) + row
+            for url, text, lang, framework in pages
+            for row in statement_templates(text, lang, framework)
+        ]
+        if rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, type=field.type)
+                 for col, field in zip(zip(*rows), _STATEMENT_ARROW)],
+                schema=_STATEMENT_ARROW,
+            )
+
+
+def page_templates(pages: DataFrame) -> DataFrame:
+    """Detected pages(url, text, lang, framework) → one row per surviving
+    statement (``STATEMENT_SCHEMA``), in one Python stage (U5-U12, F6-F10)."""
+    return pages.select("url", "text", "lang", "framework").mapInArrow(
+        _statement_batches, STATEMENT_SCHEMA
+    )
 
 
 @F.pandas_udf(ArrayType(StringType()))

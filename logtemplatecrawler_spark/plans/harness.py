@@ -3508,8 +3508,8 @@ def f7_c_preprocessor_strip(spark, sf_dir):
     BEFORE the preprocessor check (so an indented ``#include`` is still
     dropped) and the stripped text is what flows on; java statements keep
     their whitespace and their ``#``-leading lines (the rule is
-    C-conditional).  Exactly the normalize→filter order the template
-    pipeline runs (plans/template_pipeline.py:59-60).  The DuckDB twin
+    C-conditional).  The same normalize→filter order the template
+    pipeline runs in Python (core/pipeline.py:statement_templates).  The DuckDB twin
     restates the trim regex (both-anchor alternation needs the 'g' flag —
     Spark's regexp_replace is global by default) and the conditional
     filter."""

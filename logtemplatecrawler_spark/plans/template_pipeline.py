@@ -7,18 +7,21 @@ Spark shape of the reference's per-repo DAG
       → project (url, text, lang)           # column pruning: html never read
       → where detect_hit (native rlike)     # U1-U3, JVM-side
       → framework column (native)           # U4
-      → extract UDF → posexplode            # U5, Arrow batch
-      → C strip + preprocessor filter (native)  # F7
-      → statement pre-filter (native rlike)     # F6
-      → parse+formalize UDF                  # U6-U12, one Python stage
-      → null/empty drops                     # F9/F10
-      → validity mask (native, always-true)  # F8 — parity, folds away
+      → statement stage (mapInArrow)        # the ONE Python crossing:
+          extract → C strip/# drop → pre-filter → parse → validity
+          → formalize → empty drop          # U5-U12, F6-F10
+      → file column (native)
       → per-corpus dedup windows             # W3 / UNIQUE constraints
 
 Design rules for scale:
-* All filters that can run natively sit BEFORE the UDF stages — Catalyst
-  will not reorder predicates through opaque Python functions, so the order
-  in this file IS the physical order.
+* Native filters that prune the Python stage's *input* (detect) sit BEFORE
+  it — Catalyst will not reorder predicates through an opaque Python
+  stage, so the order in this file IS the physical order.  Filters over
+  its *output* run inside the stage, as ``core.pipeline.statement_templates``
+  shared with the oracle: one Arrow round trip per page batch instead of
+  two plus a posexplode, and Python regex semantics on both sides (Java's
+  ``.`` and ``\\s`` differ from Python's on carriage returns and
+  non-ASCII spaces).
 * ``html`` is projected away at the first select → parquet scans prune it
   (ReadSchema shows url/text/lang only).
 * Dedup is the only wide operation; both UNIQUE keys are window
@@ -32,10 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from logtemplatecrawler_spark.functions import columns as C
-from logtemplatecrawler_spark.operators.template_udfs import (
-    extract_raws,
-    parse_and_formalize,
-)
+from logtemplatecrawler_spark.operators.template_udfs import page_templates
 
 TEMPLATE_COLUMNS = [
     "url", "file", "stmt_idx", "framework", "raw",
@@ -50,31 +50,7 @@ def extract_templates(pages: DataFrame, dedup: bool = True,
     p = p.where(C.detect_hit(F.col("text"), F.col("lang")))
     p = p.withColumn("framework", C.framework(F.col("text"), F.col("lang")))
 
-    stmts = p.select(
-        "url",
-        "lang",
-        "framework",
-        F.posexplode(extract_raws("text", "lang", "framework")).alias("stmt_idx", "raw"),
-    )
-    stmts = stmts.withColumn("raw", C.normalize_raw(F.col("raw"), F.col("lang")))
-    stmts = stmts.where(C.keep_non_preprocessor(F.col("raw"), F.col("lang")))
-    stmts = stmts.where(C.prefilter_keep(F.col("raw")))
-
-    parsed = stmts.withColumn(
-        "pr", parse_and_formalize("raw", "lang", "framework")
-    ).select(
-        "url", "framework", "stmt_idx", "raw",
-        F.col("pr.parsed_template").alias("parsed_template"),
-        F.col("pr.arguments").alias("arguments"),
-        F.col("pr.template").alias("template"),
-    )
-    parsed = parsed.where(F.col("parsed_template").isNotNull())
-    parsed = parsed.where(C.template_valid(F.col("parsed_template")))
-    parsed = parsed.where(
-        F.col("template").isNotNull() & (F.length("template") > 0)
-        & (F.length("parsed_template") > 0)
-    )
-    parsed = parsed.withColumn("file", C.url_file(F.col("url")))
+    parsed = page_templates(p).withColumn("file", C.url_file(F.col("url")))
 
     if dedup:
         parsed = dedup_templates(parsed)

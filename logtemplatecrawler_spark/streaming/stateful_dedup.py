@@ -40,6 +40,12 @@ def _budget_fn(budget: int):
            state: GroupState) -> Iterator[pd.DataFrame]:
         (host,) = key
         taken = state.get[0] if state.exists else 0
+        if taken >= budget:
+            # exhausted host: nothing can be admitted, so skip the sort
+            for _ in batches:
+                pass
+            state.update((taken,))
+            return
         # a host group larger than one Arrow batch arrives as SEVERAL
         # chunks in shuffle order; the url-ascending admission order must
         # cover the WHOLE group (same contract fix as content_dedup's

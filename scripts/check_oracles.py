@@ -3,8 +3,12 @@ their DuckDB twins, compare sorted rows (the driver's hash-compare shape).
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 Defaults: /root/testdata/sf0.001, all queries.
+DuckDB's memory and spill limits come from DUCKDB_MEMORY_LIMIT (default
+48GiB) and DUCKDB_MAX_TEMP_DIRECTORY_SIZE (default 60GiB); set them below
+the host's RAM and free disk.
 """
 
+import os
 import sys
 from pathlib import Path
 
@@ -33,8 +37,9 @@ def main() -> int:
     # quadratic twins (e.g. the within-cell semantic pair SQL) need room at
     # stress scale: let DuckDB spill to disk instead of dying in-memory
     con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    con.execute("SET max_temp_directory_size='60GiB'")
-    con.execute("SET memory_limit='48GiB'")
+    con.execute("SET max_temp_directory_size="
+                f"'{os.environ.get('DUCKDB_MAX_TEMP_DIRECTORY_SIZE', '60GiB')}'")
+    con.execute(f"SET memory_limit='{os.environ.get('DUCKDB_MEMORY_LIMIT', '48GiB')}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"

@@ -86,6 +86,42 @@ def test_count_call_args():
     assert _count_call_args(TokenStream('foo("only")')) == 1
 
 
+def _tokens(source):
+    stream = TokenStream(source)
+    out = []
+    while not stream.eof():
+        out.append(stream.next())
+    return out
+
+
+def test_tokenizer_goldens():
+    # trailing Unicode whitespace is skipped, never a var token of its own
+    assert _tokens("x + \u2028") == [("var", "x "), ("op", "+")]
+    # ... but a var absorbs whitespace mid-token, trailing included
+    assert _tokens("foo\u2028") == [("var", "foo\u2028")]
+    assert _tokens("foo bar,") == [("var", "foo bar"), ("punc", ",")]
+    # an unterminated string runs to the end of the statement
+    assert _tokens('f("abc') == [("var", "f"), ("punc", "("), ("str", "abc")]
+    assert _tokens('""') == [("str", "")]
+    # NBSP is whitespace: skipped before a token, absorbed inside a var
+    assert _tokens("\u00a0a\u00a0b") == [("var", "a\u00a0b")]
+    # Unicode decimal digits lex as a num run
+    assert _tokens("\u0663\u0664x") == [("num", "\u0663\u0664"), ("var", "x")]
+
+
+def test_count_call_args_on_fork():
+    stream = TokenStream("f(a, g(b, c, d), e)")
+    assert _count_call_args(stream.fork()) == 3
+    while stream.peek() != ("var", "g"):
+        stream.next()
+    stream.next()
+    fork = stream.fork()
+    assert fork.peek() == ("punc", "(")
+    assert _count_call_args(fork) == 3
+    # the fork shares tokens, not the cursor
+    assert stream.peek() == ("punc", "(")
+
+
 def test_trim_roles_quirks():
     assert _trim_roles(["str", "..."], 5) == ["str", "..."]
     assert _trim_roles(["str", "..."], 1) == ["str"]

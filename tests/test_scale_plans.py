@@ -52,28 +52,27 @@ def test_scan_prunes_html(spark, pages_parquet):
 
 
 def test_native_filters_precede_python_stages(spark, pages_parquet):
-    """The rlike detect filter must sit BELOW (deeper than, i.e. executed
-    before) the first ArrowEvalPython stage — Catalyst does not reorder
-    predicates through opaque UDFs, so the declared order is physical."""
+    """The pipeline crosses into Python exactly once: ONE MapInArrow node,
+    no ArrowEvalPython (scalar UDF) stage and no Generate (posexplode).  The
+    rlike detect filter must sit BELOW (deeper than, i.e. executed before)
+    that node — Catalyst does not reorder predicates through opaque Python
+    stages, so the declared order is physical."""
     plan = _explain(
         extract_templates(spark.read.parquet(pages_parquet)), "simple"
     )
     lines = plan.splitlines()
-    arrow_idx = [i for i, l in enumerate(lines) if "ArrowEvalPython" in l]
-    # the detect filter runs on the raw `text` column; the statement
-    # pre-filter (F6, also rlike) legitimately sits between the two Python
-    # stages because it filters the *extracted* raws
+    map_idx = [i for i, l in enumerate(lines) if "MapInArrow" in l]
+    assert len(map_idx) == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+    assert "Generate" not in plan, plan
     detect_idx = [
         i for i, l in enumerate(lines) if "Filter" in l and "RLIKE(text" in l
     ]
-    assert arrow_idx and detect_idx, plan
+    assert detect_idx, plan
     # simple-mode explain prints parents first: deeper = executed earlier =
-    # LARGER line index.  The detect filter must be deeper than every
-    # Python stage.
-    assert min(detect_idx) > max(arrow_idx), plan
-    # exactly two fused Python stages (extract; parse+formalize) — a third
-    # means a UDF stage stopped fusing
-    assert len(arrow_idx) == 2, plan
+    # LARGER line index.
+    assert min(detect_idx) > map_idx[0], plan
 
 
 def test_dedup_uses_window_group_limit(spark, pages_parquet):

@@ -72,7 +72,7 @@ def test_raw_byte_identical_per_url(spark, fixture_pages):
 
 def test_plan_shape_is_scalable(spark):
     """Guard-rails on the physical plan: the scan must not read `html`, and
-    native pre-filters must sit below the first Python stage."""
+    the pipeline's Python work is one MapInArrow stage."""
     import tempfile
 
     with tempfile.TemporaryDirectory() as d:
@@ -82,9 +82,39 @@ def test_plan_shape_is_scalable(spark):
         scan_lines = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
         assert scan_lines, plan
         assert all("html" not in ln for ln in scan_lines), scan_lines
-        # detect-hit rlike filters appear as a native Filter (pushed into scan
-        # region), i.e. before any ArrowEvalPython stage in the plan tree.
-        assert "ArrowEvalPython" in plan
+        # one fused Python stage per page batch; the detect-hit rlike
+        # filters below it are pinned by tests/test_scale_plans.py
+        assert plan.count("MapInArrow") == 1, plan
+        assert "ArrowEvalPython" not in plan, plan
+
+
+def test_statement_filters_use_python_regex_semantics(spark):
+    """Statement-level filters run in Python on both sides, so Spark ≡ core
+    also where Java and Python regexes disagree: Java's ``.`` excludes a
+    carriage return (a native ``(.)\\1{5,}`` pre-filter misses the run of
+    six that core drops) and Java's ``\\s`` is ASCII-only (a native strip
+    keeps the NBSP and EM SPACE around a C statement that ``str.strip()``
+    removes)."""
+    pages = [
+        {"url": "https://h.example.org/src/Crlf.java", "lang": "java",
+         "text": ("import org.slf4j.Logger;\npublic class Crlf {\n"
+                  "    public void run(int n) {\n"
+                  '        log.info("ab\r\r\r\r\r\rcd {}", n);\n'
+                  '        log.info("kept {} items", n);\n    }\n}\n')},
+        {"url": "https://h.example.org/src/nbsp.c", "lang": "c",
+         "text": '\u00a0\u00a0printf("log value %d", v)\u2003;\n'},
+    ]
+    df = spark.createDataFrame(pages, "url string, text string, lang string")
+    got = _as_dicts(extract_templates(df, dedup=False))
+    want = sorted(
+        (r for p in pages for r in process_page(p["url"], p["text"], p["lang"])),
+        key=_key,
+    )
+    assert got == want
+    assert [(r["url"].rsplit("/", 1)[1], r["stmt_idx"], r["raw"]) for r in want] == [
+        ("Crlf.java", 1, 'log.info("kept {} items", n)'),
+        ("nbsp.c", 0, 'printf("log value %d", v)'),
+    ]
 
 
 def test_detect_vote_matches_core(spark, fixture_pages):

@@ -132,6 +132,33 @@ def test_budget_fn_orders_across_arrow_chunks():
     assert sorted(out["url"]) == ["https://h.org/a", "https://h.org/c"]
 
 
+def test_budget_fn_exhausted_host_skips_sort():
+    """A host whose cumulative budget is spent admits nothing: its batches
+    are drained unsorted and the state is rewritten unchanged."""
+    import pandas as pd
+
+    from logtemplatecrawler_spark.streaming.stateful_dedup import _budget_fn
+
+    class _SpentState:
+        exists = True
+        get = (2,)
+
+        def update(self, value):
+            self.updated = value
+
+    drained = []
+
+    def chunks():
+        for url in ("https://h.org/b", "https://h.org/a"):
+            drained.append(url)
+            yield pd.DataFrame({"url": [url]})
+
+    state = _SpentState()
+    assert list(_budget_fn(2)(("h.org",), chunks(), state)) == []
+    assert state.updated == (2,)
+    assert len(drained) == 2
+
+
 def test_flag_fn_orders_across_arrow_chunks():
     """r6 fix: a band bucket bigger than one Arrow chunk arrives as SEVERAL
     pandas DataFrames in shuffle order; the state function must sort the
