@@ -43,6 +43,15 @@ Replicated QUIRKs (all verified against the reference source):
 * mode 'simple' (the whole statement is one plain expression — no known
   formatting call) yields an empty template → row dropped (java.py:253-254,
   :63).
+
+Deviation (the same one as the uncaught TypeError in ``parse_statement``):
+formatting calls nested more than ``MAX_FORMAT_NESTING`` deep raise
+ValueError, so the row is dropped.  The reference recurses without a bound
+and dies with RecursionError (or, below the interpreter's limit, spends
+time quadratic in the statement on argument counting); a hostile page must
+fail neither the task nor the time budget.  The bound is an explicit count,
+not a RecursionError catch, so Spark's Python worker and an in-process
+caller, which start at different stack depths, drop the same rows.
 """
 
 from __future__ import annotations
@@ -128,6 +137,11 @@ C_FUNCS = {
 
 _PARSEABLE_STYLES = ("format", "simple", "printf")
 
+# Formatting calls deeper than this drop the row (module docstring).  Real
+# log statements nest one or two; 64 leaves a wide margin under the
+# interpreter's recursion limit (two frames per level).
+MAX_FORMAT_NESTING = 64
+
 
 def rewrite_printf_specs(s: str) -> str:
     """printf-style %-specifiers → '{}' (java.py:493-499)."""
@@ -159,37 +173,18 @@ def _flatten(nested) -> List[str]:
 def _count_call_args(lexer: TokenStream) -> int:
     """Count top-level commas inside the first call's parens (java.py:442-474).
 
-    Returns 0 for an empty call ``()`` via the previous-token check; the
-    initial count is 1 (a call with any token and no commas has one arg).
+    Returns 0 for an empty call ``()``; the count is otherwise 1 (a call
+    with any token and no commas has one arg) plus the commas, up to the
+    matching ')' or the end of the statement.  Advances ``lexer`` to that
+    '(' — not at all when it is the current token.  ValueError when no '('
+    follows or it ends the statement.
     """
-    prev: Optional[Tuple[str, str]] = None
-    while not lexer.eof():
-        kind, tok = lexer.peek()
-        if kind == "punc" and tok == "(":
-            prev = (kind, tok)
-            lexer.next()
-            break
+    while not lexer.eof() and lexer.peek() != ("punc", "("):
         lexer.next()
-    if lexer.eof():
+    nargs = lexer.call_arg_count()
+    if nargs is None:
         raise ValueError("Does not contain a function call")
-
-    depth: List[str] = []
-    count = 1
-    while not lexer.eof():
-        kind, tok = lexer.peek()
-        if kind == "punc" and tok == ")" and not depth:
-            if prev == ("punc", "("):
-                return 0
-            return count
-        elif kind == "punc" and tok == "(":
-            depth.append(tok)
-        elif kind == "punc" and tok == ")":
-            depth.pop()
-        elif kind == "punc" and tok == "," and not depth:
-            count += 1
-        prev = (kind, tok)
-        lexer.next()
-    return count
+    return nargs
 
 
 def _trim_roles(roles: List[str], nargs: int) -> Optional[List[str]]:
@@ -209,8 +204,10 @@ def _trim_roles(roles: List[str], nargs: int) -> Optional[List[str]]:
     return trimmed
 
 
-def _parse_format_call(lexer: TokenStream, roles: Optional[List[str]], funcs: dict):
-    """Walk a formatting call under its role template (java.py:268-341)."""
+def _parse_format_call(lexer: TokenStream, roles: Optional[List[str]],
+                       funcs: dict, level: int):
+    """Walk a formatting call under its role template (java.py:268-341).
+    ``level`` counts the formatting calls enclosing this one."""
     if not roles:
         raise ValueError("Trying to parse format without argument. Aborting...")
 
@@ -244,7 +241,7 @@ def _parse_format_call(lexer: TokenStream, roles: Optional[List[str]], funcs: di
         elif kind == "num" and role == "...":
             variables.append(tok)
         elif kind == "var" or (kind == "op" and is_unary_op(tok)):
-            sub_mode, sub_payload, sub_args = _read_variable(lexer, funcs)
+            sub_mode, sub_payload, sub_args = _read_variable(lexer, funcs, level + 1)
             if sub_mode == "simple":
                 variables.append("".join(sub_payload))
                 if role == "str":
@@ -258,7 +255,7 @@ def _parse_format_call(lexer: TokenStream, roles: Optional[List[str]], funcs: di
             if kind == "str":
                 message += tok
             elif kind == "var":
-                sub_mode, sub_payload, _ = _read_variable(lexer, funcs)
+                sub_mode, sub_payload, _ = _read_variable(lexer, funcs, level + 1)
                 if sub_mode == "simple" and sub_payload:
                     message += "{}"
                     variables += sub_payload  # list-extend — reference java.py:335.
@@ -270,12 +267,13 @@ def _parse_format_call(lexer: TokenStream, roles: Optional[List[str]], funcs: di
     return message, variables
 
 
-def _read_variable(lexer: TokenStream, funcs: dict):
+def _read_variable(lexer: TokenStream, funcs: dict, level: int = 0):
     """Scan one expression; descend into known formatting calls (java.py:384-432).
 
     Returns ('simple', token-texts, None) for a plain expression or
     ('nested', message, variables) after descending into a formatting call.
-    Raises ValueError at EOF (java.py:432) — the row is then dropped.
+    Raises ValueError at EOF (java.py:432) and when the call would be
+    ``level`` ≥ ``MAX_FORMAT_NESTING`` deep — the row is then dropped.
     """
     depth: List[str] = []
     gathered: List[str] = []
@@ -292,11 +290,13 @@ def _read_variable(lexer: TokenStream, funcs: dict):
             prev_was_ident = False
             style, default_roles = _lookup_func(gathered[-1], funcs)
             if style in _PARSEABLE_STYLES:
-                # Count this call's args from the peeked '(' on a second
-                # cursor (java.py:404-407 re-lexes the rest of the source).
-                nargs = _count_call_args(lexer.fork())
+                if level >= MAX_FORMAT_NESTING:
+                    raise ValueError("Formatting calls nested too deep")
+                # Count this call's args from the peeked '(' (java.py:404-407
+                # re-lexes the rest of the source; the count is a lookup).
+                nargs = _count_call_args(lexer)
                 roles = _trim_roles(default_roles, nargs)
-                message, variables = _parse_format_call(lexer, roles, funcs)
+                message, variables = _parse_format_call(lexer, roles, funcs, level)
                 return "nested", message, variables
             else:
                 depth.append("(")
@@ -330,6 +330,7 @@ def parse_statement(raw: str, lang: str, framework: str) -> Optional[Tuple[str, 
     # TypeError: unpacking peek()==None after a trailing '+' — the reference
     # does not catch it (it would crash the whole batch, java.py:327-328);
     # a distributed engine must not, so we drop the row instead (deviation).
+    # The MAX_FORMAT_NESTING ValueError is the same deviation.
     except (ValueError, IndexError, TypeError):
         return None
     if mode != "nested":

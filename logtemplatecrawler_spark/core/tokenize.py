@@ -25,7 +25,7 @@ Replicated QUIRKs:
 from __future__ import annotations
 
 import re
-from typing import List, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 _UNARY_RE = re.compile(r"^(\+\+|-|--|!)$")
 
@@ -65,26 +65,64 @@ def _lex(source: str) -> List[Token]:
         pos = m.end()
 
 
+def _paren_arg_counts(tokens: List[Token]) -> Dict[int, int]:
+    """For each '(' token index that is not the last token: 0 when the next
+    token is ')', else 1 + the ',' tokens directly inside it, up to its
+    matching ')' or the end of the statement — the reference's argument
+    counter (logparser/java.py:442-474) for a call opening there.  One pass
+    with a stack of the open parens' indices."""
+    counts: Dict[int, int] = {}
+    open_parens: List[int] = []
+    for i, (kind, tok) in enumerate(tokens):
+        if kind != "punc":
+            continue
+        if tok == "(":
+            open_parens.append(i)
+            counts[i] = 1
+        elif tok == ")" and open_parens:
+            j = open_parens.pop()
+            if j == i - 1:
+                counts[j] = 0
+        elif tok == "," and open_parens:
+            counts[open_parens[-1]] += 1
+    if tokens and tokens[-1] == ("punc", "("):
+        del counts[len(tokens) - 1]
+    return counts
+
+
 class TokenStream:
     """Cursor with one-token lookahead over a statement lexed once.
 
-    The parser counts a nested call's arguments from its '(' on a second
-    cursor (logparser/java.py:404); ``fork`` gives one over the same token
-    list instead of lexing the rest of the statement again.
+    The parser counts a call's arguments from its '(' (logparser/java.py:404
+    re-lexes the rest of the source and scans to the call's ')').  Here
+    ``call_arg_count`` looks the count up in a table built in one pass over
+    the tokens on first use: scanning per call is quadratic when calls
+    whose parens never close follow one another.  ``fork`` gives a second
+    cursor over the same tokens and table.
     """
 
-    __slots__ = ("_tokens", "_pos")
+    __slots__ = ("_tokens", "_pos", "_arg_counts")
 
     def __init__(self, source: str):
         self._tokens = _lex(source)
         self._pos = 0
+        self._arg_counts: Optional[Dict[int, int]] = None
 
     def fork(self) -> "TokenStream":
         """An independent cursor at the current (peeked) token."""
         other = TokenStream.__new__(TokenStream)
         other._tokens = self._tokens
         other._pos = self._pos
+        other._arg_counts = self._arg_counts
         return other
+
+    def call_arg_count(self) -> Optional[int]:
+        """Argument count of the call whose '(' is the current token (see
+        :func:`_paren_arg_counts`); None when the current token is not a
+        '(' or is the last token."""
+        if self._arg_counts is None:
+            self._arg_counts = _paren_arg_counts(self._tokens)
+        return self._arg_counts.get(self._pos)
 
     def peek(self) -> Optional[Token]:
         if self._pos < len(self._tokens):

@@ -106,8 +106,9 @@ class CrawlConfig:
     compact_every: int = 16
     extra_confs: Dict[str, str] = field(default_factory=dict)
     # Checkpoint storage backend — any object with the table-format seam's
-    # methods (ParquetManifestFormat, CommitLogFormat, or an ACID format
-    # adapter in production); swapping it is this constructor argument.
+    # methods: ParquetManifestFormat (default), BucketedParquetFormat (opt-in
+    # url-bucketed frontier snapshots for very large frontiers), or an ACID
+    # format adapter in production; swapping it is this constructor argument.
     table_format: object = field(default_factory=ParquetManifestFormat)
 
     def __post_init__(self) -> None:
@@ -274,8 +275,8 @@ def load_frontier_pending(spark: SparkSession, cfg: CrawlConfig,
     the pending set: sidecar rows later touched are superseded by their
     non-pending delta row and filtered; admissions come in with the deltas.
     Per-round read cost: O(|pending| + |touched| · compact_every), never
-    O(|frontier|).  Checkpoints written before the sidecar existed fall
-    back to the full-scan filter (correct, unpruned).  Equality with the
+    O(|frontier|).  A snapshot whose sidecar write crashed falls back to
+    the full-scan filter (correct, unpruned).  Equality with the
     full-scan filter is pinned by
     tests/test_crawl.py::test_pending_view_matches_full_filter; the pruned
     file set by tests/test_scale_plans.py::test_pending_view_skips_main_snapshot."""
@@ -355,30 +356,19 @@ def read_all_templates(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
 def _load_neg_cache(spark: SparkSession, cfg: CrawlConfig,
                     resumed: Optional[int]) -> Optional[DataFrame]:
     """Cumulative committed-template keys as of the resumed round (None on a
-    fresh crawl).  Checkpoints written before the neg_keys delta directory
-    existed fall back to a ONE-TIME rebuild from the committed template
-    deltas (an O(rounds)-path read at resume, never per-round), routed
-    through the seam's multi-snapshot read so any table format resumes."""
+    fresh crawl).  Every round writes its key delta before its commit
+    marker, so a committed checkpoint without keys is damaged: resuming
+    from it would re-admit templates earlier rounds already committed."""
     if resumed is None:
         return None
-    fmt = cfg.table_format
     neg = load_neg_keys(spark, cfg, resumed)
-    if neg is not None:
-        return neg
-    paths = [
-        os.path.join(_round_dir(cfg, r), "templates")
-        for r in range(resumed + 1)
-        if fmt.is_committed(_round_dir(cfg, r))
-        and fmt.snapshot_exists(os.path.join(_round_dir(cfg, r), "templates"))
-    ]
-    if not paths:
-        return None
-    rebuilt = fmt.read_snapshots(spark, paths).select("template", "parsed_template")
-    # One-time backfill migration: materialize the rebuilt keys as a single
-    # delta partition at the resumed round so every later round's
-    # ``load_neg_keys`` read sees them (idempotent overwrite of round=resumed).
-    fmt.write_delta(rebuilt, _neg_dir(cfg), resumed)
-    return load_neg_keys(spark, cfg, resumed)
+    if neg is None:
+        raise FileNotFoundError(
+            f"round {resumed} is committed under {cfg.checkpoint_dir} but no "
+            "negative-cache keys are (neg_keys/ deltas or a neg_snapshot); "
+            "refusing to resume without them"
+        )
+    return neg
 
 
 def with_seed_rank(spark: SparkSession, all_seeds: DataFrame):
@@ -533,8 +523,8 @@ def compact_checkpoint(spark: SparkSession, cfg: CrawlConfig) -> Dict:
     never deletes superseded deltas or snapshots.
 
     Crash-safe: the snapshot is written BEFORE any delta is pruned, and
-    ``snapshot_exists`` only trusts complete snapshots (parquet ``_SUCCESS``
-    marker / commit-log metadata pointer), so a rerun after a crash at any
+    ``snapshot_exists`` only trusts complete snapshots (the parquet
+    ``_SUCCESS`` marker), so a rerun after a crash at any
     point either rewrites the snapshot or skips straight to pruning —
     never reads partial data (the frontier reconstruction skips incomplete
     snapshots for the same reason).  Deltas ABOVE the last complete round
@@ -545,15 +535,14 @@ def compact_checkpoint(spark: SparkSession, cfg: CrawlConfig) -> Dict:
     if last is None:
         raise FileNotFoundError(f"no committed round under {cfg.checkpoint_dir}")
     fmt = cfg.table_format
-    snap_path = os.path.join(_round_dir(cfg, last), "frontier")
+    snap_path = _frontier_snap_path(cfg, last)
     wrote = False
     # Bucket-count lifecycle (VERDICT r04 nit 4): offline compaction is the
     # single-writer window where the snapshot can be REWRITTEN at a larger
     # bucket count once the frontier outgrows rows_per_bucket — the same
     # amortized-doubling policy as the URL-seen bloom.  The frontier is
     # localCheckpointed first because the rewrite overwrites the very
-    # files its own plan reads (a versioned format would write-then-swap
-    # instead; this is the ParquetManifestFormat-family equivalent).
+    # files its own plan reads.
     resized_to = None
     if hasattr(fmt, "target_buckets"):
         frontier_now = load_frontier(spark, cfg, last)
@@ -570,8 +559,8 @@ def compact_checkpoint(spark: SparkSession, cfg: CrawlConfig) -> Dict:
         wrote = True
     elif not fmt.snapshot_exists(_pending_snap_path(cfg, last)):
         # snapshot exists but its pending sidecar doesn't (crash between the
-        # two writes, or a pre-sidecar checkpoint): backfill it so the
-        # per-round pending read prunes from here on.
+        # two writes): backfill it so the per-round pending read prunes from
+        # here on.
         fmt.write_snapshot(
             fmt.read_snapshot(spark, snap_path).where(
                 F.col("state") == FR.STATE_PENDING
@@ -604,25 +593,11 @@ def compact_checkpoint(spark: SparkSession, cfg: CrawlConfig) -> Dict:
     # starts from the LAST complete round) and each holds a full table copy.
     expired = 0
     for b in range(last - 1, -1, -1):
-        # `neg_keys` is the LEGACY r02 cumulative-snapshot path (each round a
-        # full key-set copy) — migrated checkpoints still hold them and they
-        # are unreachable after compaction, so expire them too (ADVICE r03).
-        for dead in (os.path.join(_round_dir(cfg, b), "frontier"),
-                     _pending_snap_path(cfg, b),
-                     _neg_snap_path(cfg, b),
-                     os.path.join(_round_dir(cfg, b), "neg_keys")):
+        for dead in (_frontier_snap_path(cfg, b), _pending_snap_path(cfg, b),
+                     _neg_snap_path(cfg, b)):
             if fmt.snapshot_exists(dead):
                 fmt.drop_snapshot(dead)
                 expired += 1
-    # Formats that retain superseded snapshot VERSIONS for concurrent
-    # readers (CommitLogFormat) expire them here — offline compaction is
-    # the single-writer maintenance window, exactly Iceberg's
-    # expire_snapshots.
-    if hasattr(fmt, "expire_versions"):
-        for live in (snap_path, _pending_snap_path(cfg, last),
-                     _neg_snap_path(cfg, last)):
-            if fmt.snapshot_exists(live):
-                fmt.expire_versions(live, keep=1)
     return {"round": last, "wrote_snapshot": wrote,
             "resized_buckets_to": resized_to,
             "pruned_delta_partitions": pruned,
@@ -631,15 +606,12 @@ def compact_checkpoint(spark: SparkSession, cfg: CrawlConfig) -> Dict:
             "expired_snapshots": expired}
 
 
-def _read_committed_metrics(cfg: CrawlConfig, rnd: int) -> Optional[Dict]:
-    """metrics.json of a committed round (both formats write it into the
-    round dir via ``commit_round``); None when absent (legacy checkpoint)."""
-    path = os.path.join(_round_dir(cfg, rnd), "metrics.json")
-    if not os.path.exists(path):
-        return None
+def _read_committed_metrics(cfg: CrawlConfig, rnd: int) -> Dict:
+    """metrics.json of a committed round (``commit_round`` writes it into
+    the round dir before the commit marker)."""
     import json
 
-    with open(path) as fh:
+    with open(os.path.join(_round_dir(cfg, rnd), "metrics.json")) as fh:
         return json.load(fh)
 
 
@@ -691,18 +663,10 @@ def run_crawl(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
         persisted_frontier = frontier
         pending = load_frontier_pending(spark, cfg, resumed).persist()
         persisted_pending = pending
-        prev_metrics = _read_committed_metrics(cfg, resumed)
-        if prev_metrics and "frontier_states" in prev_metrics:
-            state_counts = {
-                k: int(v) for k, v in prev_metrics["frontier_states"].items()
-            }
-        else:
-            # legacy checkpoint without metrics.json: ONE full groupBy at
-            # resume (never per round)
-            state_counts = {
-                r["state"]: r["count"]
-                for r in frontier.groupBy("state").count().collect()
-            }
+        state_counts = {
+            k: int(v) for k, v in
+            _read_committed_metrics(cfg, resumed)["frontier_states"].items()
+        }
         next_round = resumed + 1
     # Compaction only runs offline, so the neg snapshot round cannot change
     # mid-crawl: resolve it ONCE here and pass it to every per-round

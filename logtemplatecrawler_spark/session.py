@@ -65,8 +65,9 @@ def build_session(app_name: str = "logtemplatecrawler-spark",
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "64m"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # ParquetManifestFormat.snapshot_exists trusts the _SUCCESS marker as
-        # the write-completeness signal; object-store configs commonly turn
+        # The checkpoint formats' snapshot_exists (ParquetManifestFormat and
+        # its bucketed subclass) trusts the _SUCCESS marker as the
+        # write-completeness signal; object-store configs commonly turn
         # it off (marksuccessfuljobs=false), which would make every committed
         # snapshot read as absent on resume — pin it on (ADVICE r03).
         .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",

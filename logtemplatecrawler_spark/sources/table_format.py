@@ -6,9 +6,11 @@ delta, and the negative-cache key delta — plus a commit marker that makes
 the round atomic ("a round without a MANIFEST never happened").
 
 This module is the thin interface between those semantics and the storage
-format.  The in-sandbox implementation is plain parquet with a MANIFEST-last
-commit protocol; at warehouse scale the SAME interface is implemented by an
-ACID table format (the north rule names Iceberg):
+format.  The implementation is one family: plain parquet with a
+MANIFEST-last commit protocol (:class:`ParquetManifestFormat`, the default)
+and its :class:`BucketedParquetFormat` subclass, which only changes how
+frontier snapshots are laid out.  At warehouse scale the SAME interface is
+implemented by an ACID table format (the north rule names Iceberg):
 
 * ``write_snapshot``  → Iceberg overwrite (full-table rewrite; used only for
   periodic frontier compaction and the per-round templates delta dir);
@@ -75,7 +77,7 @@ class ParquetManifestFormat:
 
     def read_snapshots(self, spark: SparkSession, paths: List[str]) -> DataFrame:
         """Union of several snapshots in ONE multi-path read (used by the
-        one-time export / legacy-rebuild paths, never the round loop)."""
+        one-time template export, never the round loop)."""
         return spark.read.parquet(*paths)
 
     def snapshot_exists(self, path: str) -> bool:
@@ -101,10 +103,8 @@ class ParquetManifestFormat:
         lands in a dot-prefixed staging dir (hidden from Spark's partition
         discovery) and is PUBLISHED with one atomic directory rename, so a
         crash mid-write can never leave a half-partition that readers
-        mistake for committed rows — the round-loop's MANIFEST protocol
-        already covers its own deltas, but out-of-protocol writers (the
-        legacy neg-cache backfill at an ALREADY-committed round) have no
-        MANIFEST to hide behind.
+        mistake for committed rows — whether or not a MANIFEST commit
+        follows the write.
         """
         if "round" in df.columns:  # would collide with the partition column
             raise ValueError("delta rows must not carry a 'round' column")
@@ -346,266 +346,39 @@ class BucketedParquetFormat(ParquetManifestFormat):
 
 
 def detect_format(checkpoint_dir: str):
-    """Infer the table format of an EXISTING checkpoint from its on-disk
-    commit markers (``MANIFEST.json`` → parquet+manifest, ``_commit.json``
-    → commit-log), falling back to the delta-directory markers
-    (``_log.json`` → commit-log, ``round=`` partition dirs → parquet) for a
-    checkpoint that crashed before its first round commit (ADVICE r03 —
-    defaulting such a dir to parquet made read_deltas choke on commit-log
-    data dirs).  Returns None for a fresh (or absent) directory — callers
-    choose a default for new checkpoints; see :func:`require_format` for
-    the strict variant."""
+    """The table format of the checkpoint under ``checkpoint_dir``.
+
+    A frontier snapshot carrying the bucket marker makes it a
+    :class:`BucketedParquetFormat` at the newest such snapshot's recorded
+    spec (compaction must keep rewriting snapshots bucketed, not silently
+    downgrade the layout).  Any other checkpoint entry — a ``round=`` dir,
+    committed or not, or the ``frontier_deltas``/``neg_keys`` delta dirs a
+    crawl killed before its first commit leaves (ADVICE r03) — makes it a
+    :class:`ParquetManifestFormat`.  Returns None only for a fresh (absent
+    or empty) directory; callers choose the format of a new checkpoint.  A
+    non-empty directory with none of these entries raises instead of being
+    misread as a checkpoint."""
     if not os.path.isdir(checkpoint_dir):
         return None
-    manifest_seen = False
-    for name in sorted(os.listdir(checkpoint_dir)):
-        if name.startswith("round="):
-            rdir = os.path.join(checkpoint_dir, name)
-            # a bucketed frontier snapshot marks the whole checkpoint as
-            # BucketedParquetFormat (compaction must keep rewriting
-            # snapshots bucketed, not silently downgrade to plain parquet)
-            bmark = os.path.join(
-                rdir, "frontier", BucketedParquetFormat._BUCKET_MARKER
+    names = sorted(os.listdir(checkpoint_dir), reverse=True)
+    if not names:
+        return None
+    for name in names:
+        if not name.startswith("round="):
+            continue
+        marker = os.path.join(checkpoint_dir, name, "frontier",
+                              BucketedParquetFormat._BUCKET_MARKER)
+        if os.path.exists(marker):
+            with open(marker) as fh:
+                spec = json.load(fh)
+            return BucketedParquetFormat(
+                spec["n_buckets"], rows_per_bucket=spec["rows_per_bucket"]
             )
-            if os.path.exists(bmark):
-                with open(bmark) as fh:
-                    spec = json.load(fh)
-                return BucketedParquetFormat(
-                    spec["n_buckets"],
-                    rows_per_bucket=spec.get(
-                        "rows_per_bucket",
-                        BucketedParquetFormat().rows_per_bucket,
-                    ),
-                )
-            if os.path.exists(os.path.join(rdir, _MANIFEST)):
-                manifest_seen = True
-            if os.path.exists(os.path.join(rdir, CommitLogFormat._COMMIT)):
-                return CommitLogFormat()
-    if manifest_seen:
+    if any(n.startswith("round=") or n in ("frontier_deltas", "neg_keys")
+           for n in names):
         return ParquetManifestFormat()
-    for sub in ("frontier_deltas", "neg_keys"):
-        d = os.path.join(checkpoint_dir, sub)
-        if os.path.exists(os.path.join(d, CommitLogFormat._LOG)):
-            return CommitLogFormat()
-        if os.path.isdir(d) and any(
-            n.startswith("round=") or n.startswith(".staging-round=")
-            for n in os.listdir(d)
-        ):
-            return ParquetManifestFormat()
-    return None
-
-
-def require_format(checkpoint_dir: str):
-    """Strict auto-detection for resume paths: None only when the directory
-    is fresh (absent or empty); a NON-EMPTY unrecognizable directory raises
-    instead of silently defaulting to a format that would misread it."""
-    fmt = detect_format(checkpoint_dir)
-    if fmt is not None:
-        return fmt
-    if os.path.isdir(checkpoint_dir) and os.listdir(checkpoint_dir):
-        raise ValueError(
-            f"{checkpoint_dir} is non-empty but carries no recognizable "
-            "checkpoint markers (MANIFEST.json/_commit.json/_log.json/"
-            "round= partitions); refusing to guess a table format — pass "
-            "--format explicitly or point at a fresh directory"
-        )
-    return None
-
-
-class CommitLogFormat:
-    """Second seam implementation — Iceberg-shaped metadata over parquet.
-
-    Exists to PROVE the scheduler's claim that swapping the table format is
-    a constructor argument (tests/test_table_format_contract.py runs the
-    full crawl + resume under both formats and asserts identical results).
-    Physical differences from :class:`ParquetManifestFormat`:
-
-    * snapshots are VERSIONED: each ``write_snapshot`` lands in a fresh
-      ``v%06d`` data dir and then atomically swaps a ``_meta.json`` pointer
-      (``os.replace`` — readers see old or new, never torn).  Overwrite
-      does not touch the previous version's files → snapshot isolation,
-      exactly Iceberg's metadata-location swap;
-    * readers NEVER list directories: the data location always comes from
-      the metadata pointer / commit log (Iceberg's manifests);
-    * deltas append an entry to ``_log.json`` (round → data dir); a retried
-      round REPLACES its own entry (old dir garbage-collected best-effort),
-      so a crashed rerun is idempotent; ``read_deltas`` resolves the
-      selected dirs from the log and issues ONE multi-path read (the
-      ``round`` value is materialized as a data column at write, so the
-      range filter prunes on row-group stats);
-    * the commit marker is ``_commit.json`` written with the same atomic
-      replace — proving the scheduler depends only on
-      ``commit_round``/``is_committed`` semantics, not on MANIFEST naming;
-    * superseded snapshot versions are RETAINED (``retained_versions``,
-      default 2 = current + previous) so a concurrent reader that resolved
-      the old pointer just before an overwrite still finds its files —
-      Iceberg keeps history until ``expire_snapshots`` for the same reason.
-      ``expire_versions`` is the offline maintenance call (run by
-      ``compact_checkpoint``, a single-writer window) that trims history
-      down to the newest ``keep`` versions.  Pinned by
-      tests/test_table_format_contract.py::test_commitlog_version_retention.
-    """
-
-    _META = "_meta.json"
-    _LOG = "_log.json"
-    _COMMIT = "_commit.json"
-
-    def __init__(self, retained_versions: int = 2):
-        if retained_versions < 1:
-            raise ValueError("retained_versions must be >= 1")
-        self.retained_versions = retained_versions
-
-    # -- snapshots -----------------------------------------------------------
-
-    @staticmethod
-    def _version_dirs(path: str):
-        """Snapshot version data dirs under ``path``, oldest first.
-        Sorted NUMERICALLY — lexicographic order breaks past v999999 and
-        would GC the live version (r4 review finding)."""
-        return sorted(
-            (name for name in os.listdir(path)
-             if name.startswith("v") and name[1:].isdigit()),
-            key=lambda name: int(name[1:]),
-        )
-
-    def write_snapshot(self, df: DataFrame, path: str) -> None:
-        meta_path = os.path.join(path, self._META)
-        version = 0
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                version = json.load(fh)["version"] + 1
-        data = f"v{version:06d}"
-        df.write.mode("overwrite").parquet(os.path.join(path, data))
-        _atomic_write_json(meta_path, {"version": version, "data": data})
-        # GC versions beyond the retention window; the newest
-        # ``retained_versions`` (current included) stay readable for
-        # concurrent readers holding a just-superseded pointer.
-        for name in self._doomed_versions(path, self.retained_versions):
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
-
-    def _doomed_versions(self, path: str, keep: int):
-        """Version dirs eligible for GC: everything except the dir the
-        ``_meta.json`` pointer resolves to (ALWAYS retained — numeric order
-        alone would, after a crash between the parquet write and the meta
-        swap, rank the orphan vNNNNNN newest and delete the live pointed-to
-        version, leaving ``read_snapshot`` resolving to a deleted dir —
-        ADVICE r04) plus the newest ``keep - 1`` other dirs."""
-        live = os.path.basename(self._resolve(path))
-        others = [d for d in self._version_dirs(path) if d != live]
-        return others[: -(keep - 1) or None]
-
-    def expire_versions(self, path: str, keep: int = 1) -> int:
-        """Offline history expiry (single-writer maintenance window): drop
-        all but the meta-pointed live version and the newest ``keep - 1``
-        other version dirs.  Returns dirs removed."""
-        if keep < 1:
-            raise ValueError("keep must be >= 1")
-        doomed = self._doomed_versions(path, keep)
-        for name in doomed:
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
-        return len(doomed)
-
-    def _resolve(self, path: str) -> str:
-        with open(os.path.join(path, self._META)) as fh:
-            return os.path.join(path, json.load(fh)["data"])
-
-    def read_snapshot(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.parquet(self._resolve(path))
-
-    def read_snapshots(self, spark: SparkSession, paths: List[str]) -> DataFrame:
-        return spark.read.parquet(*[self._resolve(p) for p in paths])
-
-    def snapshot_exists(self, path: str) -> bool:
-        return os.path.exists(os.path.join(path, self._META))
-
-    def drop_snapshot(self, path: str) -> None:
-        shutil.rmtree(path, ignore_errors=True)
-
-    # -- per-round delta commits ---------------------------------------------
-
-    def _read_log(self, base_dir: str) -> Dict:
-        log_path = os.path.join(base_dir, self._LOG)
-        if not os.path.exists(log_path):
-            return {"serial": 0, "entries": {}}
-        with open(log_path) as fh:
-            return json.load(fh)
-
-    def write_delta(self, df: DataFrame, base_dir: str, rnd: int) -> None:
-        if "round" in df.columns:  # reserved for the range filter
-            raise ValueError("delta rows must not carry a 'round' column")
-        log = self._read_log(base_dir)
-        prev = log["entries"].get(str(rnd))
-        data = f"r{rnd:04d}_{log['serial']:04d}"
-        df.withColumn("round", F.lit(rnd)).write.mode("overwrite").parquet(
-            os.path.join(base_dir, data)
-        )
-        log["entries"][str(rnd)] = data
-        log["serial"] += 1
-        _atomic_write_json(os.path.join(base_dir, self._LOG), log)
-        if prev is not None and prev != data:
-            shutil.rmtree(os.path.join(base_dir, prev), ignore_errors=True)
-
-    def read_deltas(self, spark: SparkSession, base_dir: str,
-                    max_round: int, min_round_exclusive: int = -1
-                    ) -> Optional[DataFrame]:
-        entries = self._read_log(base_dir)["entries"]
-        if not entries:
-            return None
-        dirs = [
-            os.path.join(base_dir, d)
-            for r, d in entries.items()
-            if min_round_exclusive < int(r) <= max_round
-        ]
-        if not dirs:
-            # selection empty but the table exists: derive the (writer)
-            # schema from any committed delta, return it empty
-            any_dir = os.path.join(base_dir, next(iter(entries.values())))
-            return spark.read.parquet(any_dir).where(F.lit(False)).drop("round")
-        df = spark.read.parquet(*dirs)
-        df = df.where(
-            (F.col("round") > min_round_exclusive)
-            & (F.col("round") <= max_round)
-        )
-        return df.drop("round")
-
-    def deltas_exist(self, base_dir: str) -> bool:
-        return bool(self._read_log(base_dir)["entries"])
-
-    def delta_rounds(self, base_dir: str):
-        return sorted(int(r) for r in self._read_log(base_dir)["entries"])
-
-    def prune_deltas(self, base_dir: str, up_to_round: int) -> int:
-        """Drop log entries (and their data dirs) with ``round <=
-        up_to_round``: rewrite the commit log first (atomic pointer swap —
-        readers never see a log entry whose files are gone), then GC.
-        Also sweeps ORPHANED data dirs (present on disk, absent from the
-        log) left by a crash between a previous log swap and its rmtree —
-        safe because pruning is a single-writer maintenance operation, so
-        no in-flight write_delta can own an unlogged dir concurrently."""
-        log = self._read_log(base_dir)
-        doomed = {r: d for r, d in log["entries"].items()
-                  if int(r) <= up_to_round}
-        log["entries"] = {r: d for r, d in log["entries"].items()
-                          if r not in doomed}
-        if doomed:
-            _atomic_write_json(os.path.join(base_dir, self._LOG), log)
-        live = set(log["entries"].values())
-        if os.path.isdir(base_dir):
-            for name in os.listdir(base_dir):
-                full = os.path.join(base_dir, name)
-                if (name not in live and name != self._LOG
-                        and not name.endswith(".tmp") and os.path.isdir(full)):
-                    shutil.rmtree(full, ignore_errors=True)
-        return len(doomed)
-
-    # -- atomic round commit -------------------------------------------------
-
-    def commit_round(self, round_dir: str, metrics: Optional[Dict] = None) -> None:
-        os.makedirs(round_dir, exist_ok=True)
-        if metrics is not None:
-            with open(os.path.join(round_dir, "metrics.json"), "w") as fh:
-                json.dump(metrics, fh)
-        _atomic_write_json(os.path.join(round_dir, self._COMMIT), {"complete": True})
-
-    def is_committed(self, round_dir: str) -> bool:
-        return os.path.exists(os.path.join(round_dir, self._COMMIT))
+    raise ValueError(
+        f"{checkpoint_dir} is non-empty but holds no checkpoint entries "
+        "(round= dirs, frontier_deltas/, neg_keys/); refusing to read it as "
+        "a checkpoint — point at a crawl checkpoint or a fresh directory"
+    )

@@ -22,8 +22,6 @@ all data at once), which is what the parity test compares against.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -38,15 +36,6 @@ def _win_date(col):
     return F.lpad(
         F.floor(F.unix_timestamp(col) / 3600).cast("string"), 12, "0"
     )
-
-
-def _legacy_unpartitioned(out_dir: str) -> bool:
-    """True when ``out_dir`` is a pre-r4 sink (parquet files at the root,
-    no ``win_date=`` partition dirs) — appends must keep that layout, or a
-    resumed legacy sink would mix layouts and break the read."""
-    if not os.path.isdir(out_dir):
-        return False
-    return any(n.endswith(".parquet") for n in os.listdir(out_dir))
 
 
 def windowed_host_metrics(pages: DataFrame, window_len: str = "1 hour",
@@ -123,20 +112,16 @@ def drain_windowed_updates(spark, pages_dir: str, schema: str,
     ``win_date`` (hour-granular, lexicographically ordered), so
     :func:`read_windowed_updates` with ``min_win_start`` partition-prunes
     straight past closed windows — without it, a long-running stream's
-    every read re-scanned the entire sink history.  A pre-r4 sink dir
-    (root-level files) keeps its legacy unpartitioned layout on resume."""
+    every read re-scanned the entire sink history."""
     src = spark.readStream.schema(schema).parquet(pages_dir)
     agg = windowed_host_metrics(src, window_len, watermark_delay)
 
     def _sink(batch_df, batch_id: int) -> None:
-        stamped = batch_df.withColumn("batch_id", F.lit(batch_id))
-        if _legacy_unpartitioned(out_dir):
-            stamped.write.mode("append").parquet(out_dir)
-        else:
-            (
-                stamped.withColumn("win_date", _win_date(F.col("win_start")))
-                .write.mode("append").partitionBy("win_date").parquet(out_dir)
-            )
+        (
+            batch_df.withColumn("batch_id", F.lit(batch_id))
+            .withColumn("win_date", _win_date(F.col("win_start")))
+            .write.mode("append").partitionBy("win_date").parquet(out_dir)
+        )
 
     q = (
         agg.writeStream.foreachBatch(_sink)
@@ -153,19 +138,13 @@ def _scan_updates(spark, out_dir: str, min_win_start=None) -> DataFrame:
     horizon filters applied at the source (partition-column predicate first
     so it prunes).  Exposed separately so the pruning test can probe
     ``input_file_name()`` before aggregation erases file lineage."""
-    # mergeSchema + coalesce downstream: a sink directory that predates the
-    # batch_id stamp (resumed via its checkpoint) holds mixed schemas —
-    # old files' rows read as batch_id null and must order OLDEST
-    df = spark.read.option("mergeSchema", "true").parquet(out_dir)
+    df = spark.read.parquet(out_dir)
     if min_win_start is not None:
         cutoff = F.lit(min_win_start).cast("timestamp")
-        if "win_date" in df.columns:
-            # string predicate on the partition column → partition pruning
-            df = df.where(F.col("win_date") >= _win_date(cutoff))
+        # string predicate on the partition column → partition pruning
+        df = df.where(F.col("win_date") >= _win_date(cutoff))
         df = df.where(F.col("win_start") >= cutoff)
-    if "win_date" in df.columns:
-        df = df.drop("win_date")
-    return df
+    return df.drop("win_date")
 
 
 def read_windowed_updates(spark, out_dir: str, min_win_start=None) -> DataFrame:
@@ -175,17 +154,14 @@ def read_windowed_updates(spark, out_dir: str, min_win_start=None) -> DataFrame:
     input — the keyed-sink contract.
 
     ``min_win_start`` (timestamp or ISO string) bounds the read to windows
-    starting at/after it: on the partitioned (r4) layout the predicate on
-    the ``win_date`` partition column PRUNES closed windows' files from the
-    scan entirely (pinned by tests/test_streaming_and_tables.py::
-    test_windowed_updates_pruned_read asserts on ``inputFiles()``), so the
-    read cost tracks the open-window horizon, not stream lifetime."""
+    starting at/after it: the predicate on the ``win_date`` partition
+    column PRUNES closed windows' files from the scan entirely (pinned by
+    tests/test_streaming_and_tables.py::test_windowed_updates_pruned_read
+    asserts on ``inputFiles()``), so the read cost tracks the open-window
+    horizon, not stream lifetime."""
     from pyspark.sql import Window
 
     df = _scan_updates(spark, out_dir, min_win_start).dropDuplicates()
-    if "batch_id" not in df.columns:
-        df = df.withColumn("batch_id", F.lit(None).cast("long"))
-    df = df.withColumn("batch_id", F.coalesce(F.col("batch_id"), F.lit(-1)))
     w = Window.partitionBy("win_start", "host").orderBy(F.col("batch_id").desc())
     return (
         df.withColumn("_rn", F.row_number().over(w))

@@ -9,7 +9,12 @@ crawls or from a maintenance cron; crash-safe and idempotent (see
 
 Usage:
     spark-submit --py-files pkg.zip scripts/compact_checkpoint.py \
-        --checkpoint /path/to/ckpt [--format parquet|commitlog] [--master ...]
+        --checkpoint /path/to/ckpt [--buckets N] [--master ...]
+
+The checkpoint keeps the layout it was written with (``detect_format``; a
+bucketed checkpoint still grows its bucket count by ``rows_per_bucket``).
+With ``--buckets N`` the frontier snapshots this run writes are url-bucketed
+with at least N buckets.
 """
 
 from __future__ import annotations
@@ -21,16 +26,10 @@ import json
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--format", choices=["auto", "parquet", "commitlog",
-                                         "bucketed"],
-                    default="auto",
-                    help="auto (default) infers the format from the "
-                         "checkpoint's commit markers — prefer it: an "
-                         "explicit --format parquet on a BUCKETED "
-                         "checkpoint would rewrite the compacted snapshot "
-                         "unbucketed and permanently downgrade the layout")
-    ap.add_argument("--buckets", type=int, default=32,
-                    help="bucket count for --format bucketed")
+    ap.add_argument("--buckets", type=int, default=None,
+                    help="write frontier snapshots CLUSTERED BY (url) into "
+                         "at least N buckets; default: keep the "
+                         "checkpoint's layout")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
@@ -41,22 +40,14 @@ def main() -> None:
     from logtemplatecrawler_spark.session import build_session
     from logtemplatecrawler_spark.sources.table_format import (
         BucketedParquetFormat,
-        CommitLogFormat,
-        ParquetManifestFormat,
         detect_format,
     )
 
-    if args.format == "auto":
-        fmt = detect_format(args.checkpoint)
-        if fmt is None:
-            ap.error(f"no recognizable committed round under {args.checkpoint} "
-                     "(nothing to compact; pass --format to override detection)")
-    elif args.format == "parquet":
-        fmt = ParquetManifestFormat()
-    elif args.format == "bucketed":
+    fmt = detect_format(args.checkpoint)
+    if fmt is None:
+        ap.error(f"no checkpoint under {args.checkpoint} (nothing to compact)")
+    if args.buckets is not None:
         fmt = BucketedParquetFormat(n_buckets=args.buckets)
-    else:
-        fmt = CommitLogFormat()
     spark = build_session("compact_checkpoint", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
     try:

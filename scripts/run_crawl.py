@@ -5,10 +5,16 @@ Usage:
     spark-submit --py-files pkg.zip scripts/run_crawl.py \
         --pages /path/to/pages.parquet --checkpoint /path/to/ckpt \
         [--seeds /path/to/seeds.parquet] [--robots /path/to/robots.parquet] \
-        [--budget 2] [--rounds 100] [--fixture-pages 400]
+        [--budget 2] [--rounds 100] [--fixture-pages 400] [--buckets N]
 
 Without --pages, deterministic fixture pages/seeds/robots (seed=42) are
 generated in-session — handy for smoke runs and benchmarks.
+
+Checkpoint layout: a fresh checkpoint is plain parquet; an existing one
+keeps the layout it was written with (``detect_format``).  ``--buckets N``
+writes frontier snapshots as url-bucketed tables with N buckets — the
+opt-in layout for very large frontiers, where it makes MERGE-on-read
+exchange-free on the snapshot side (keep N >= spark.sql.shuffle.partitions).
 """
 
 from __future__ import annotations
@@ -27,17 +33,10 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=100)
     ap.add_argument("--fixture-pages", type=int, default=400)
     ap.add_argument("--master", default=None)
-    ap.add_argument("--format", choices=["auto", "parquet", "commitlog",
-                                         "bucketed"],
-                    default="auto",
-                    help="checkpoint table format: auto (default) infers an "
-                         "existing checkpoint's format from its commit "
-                         "markers and uses parquet for a fresh one; "
-                         "bucketed = parquet with frontier snapshots as "
-                         "CLUSTERED BY (url) bucketed tables (exchange-free "
-                         "MERGE-on-read)")
-    ap.add_argument("--buckets", type=int, default=32,
-                    help="bucket count for --format bucketed")
+    ap.add_argument("--buckets", type=int, default=None,
+                    help="write frontier snapshots CLUSTERED BY (url) into N "
+                         "buckets (exchange-free MERGE-on-read); default: "
+                         "keep the checkpoint's layout, parquet when fresh")
     args = ap.parse_args()
 
     from logtemplatecrawler_spark.session import build_session
@@ -45,9 +44,8 @@ def main() -> None:
     from logtemplatecrawler_spark.sources import fixtures
     from logtemplatecrawler_spark.sources.table_format import (
         BucketedParquetFormat,
-        CommitLogFormat,
         ParquetManifestFormat,
-        require_format,
+        detect_format,
     )
 
     spark = build_session("crawl", master=args.master)
@@ -68,17 +66,11 @@ def main() -> None:
         seeds = fixtures.seeds_df(spark, rows, seed=42)
         robots = fixtures.robots_df(spark, rows, seed=42)
 
-    if args.format == "auto":
-        # require_format raises on a non-empty unrecognizable checkpoint
-        # instead of silently defaulting to a format that would misread it
-        # (ADVICE r03); a genuinely fresh dir starts on parquet.
-        fmt = require_format(args.checkpoint) or ParquetManifestFormat()
-    elif args.format == "parquet":
-        fmt = ParquetManifestFormat()
-    elif args.format == "bucketed":
+    # detect_format raises on a non-empty directory that is not a
+    # checkpoint (ADVICE r03), with or without --buckets
+    fmt = detect_format(args.checkpoint) or ParquetManifestFormat()
+    if args.buckets is not None:
         fmt = BucketedParquetFormat(n_buckets=args.buckets)
-    else:
-        fmt = CommitLogFormat()
     cfg = CrawlConfig(
         checkpoint_dir=args.checkpoint,
         host_budget=args.budget,

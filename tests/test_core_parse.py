@@ -176,3 +176,50 @@ def test_u13_check_number_golden():
     import pytest as _pytest
     with _pytest.raises(TypeError):                 # reference unpack crash
         number_argument_tag("abc")
+
+
+def _nested_format(depth):
+    """``depth`` nested ``String.format("aN %s", … + "q")`` calls — the
+    shape of perfbench/inputs.py:hostile_page."""
+    inner = "requestId"
+    for i in range(depth):
+        inner = f'String.format("a{i} %s", {inner} + "q")'
+    return f"log.info({inner})"
+
+
+def test_format_nesting_bound():
+    """Formatting calls nested past MAX_FORMAT_NESTING drop the row with a
+    ValueError (the documented deviation), not a RecursionError, and the
+    hostile 600-deep statement (~19 KB) is dropped quickly."""
+    import time
+
+    from logtemplatecrawler_spark.core.parse import MAX_FORMAT_NESTING
+
+    # log.info + 63 String.format calls = exactly the bound: still parsed
+    out = parse_statement(_nested_format(MAX_FORMAT_NESTING - 1), "java", "slf4j")
+    assert out is not None
+    assert out[0].startswith("a62 {}a61 {}")
+    assert parse_statement(_nested_format(MAX_FORMAT_NESTING), "java", "slf4j") is None
+
+    hostile = _nested_format(600)
+    assert len(hostile) > 19_000
+    t0 = time.process_time()
+    assert parse_statement(hostile, "java", "slf4j") is None
+    assert time.process_time() - t0 < 0.5
+
+
+def test_unclosed_sibling_calls_parse_in_linear_time():
+    """Sibling calls whose parens never close: each call's argument count
+    spans the rest of the statement, so counting per call by scanning was
+    quadratic (~2.6 CPU s at 15 KB).  The counts come from one pass now;
+    the result is unchanged."""
+    import time
+
+    def stmt(k):
+        return 'printf("m %d", ' + "printk(a, (1), " * k + "x)"
+
+    assert parse_statement(stmt(3), "c", "unknown") == ("m {}111", ["x"])
+    t0 = time.process_time()
+    out = parse_statement(stmt(1000), "c", "unknown")
+    assert time.process_time() - t0 < 0.5
+    assert out == ("m {}" + "1" * 1000, ["x"])

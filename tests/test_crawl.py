@@ -486,28 +486,24 @@ def test_bloom_path_crawl_matches_oracle(spark, corpus, tmp_path_factory):
     assert got == want
 
 
-def test_resume_without_neg_keys_rebuilds_cache(spark, corpus, tmp_path_factory):
-    """Checkpoints written before neg_keys existed must still resume: the
-    cache falls back to a one-time rebuild from the committed deltas
-    (scheduler._load_neg_cache), and the finished crawl matches the oracle."""
+def test_resume_without_neg_keys_raises(spark, corpus, tmp_path_factory):
+    """Every committed round writes its negative-cache key delta before its
+    commit marker, so a committed checkpoint without neg_keys is damaged:
+    resuming must refuse (scheduler._load_neg_cache) instead of re-admitting
+    templates the earlier rounds already committed."""
     import shutil
 
     pages, seeds, robots = corpus
-    ckpt = str(tmp_path_factory.mktemp("crawl_ckpt_legacy"))
+    ckpt = str(tmp_path_factory.mktemp("crawl_ckpt_no_neg"))
     cfg = CrawlConfig(checkpoint_dir=ckpt, host_budget=BUDGET, max_rounds=3)
     run_crawl(spark, pages_df(spark, N_PAGES, seed=42),
               seeds_df(spark, pages, seed=42), robots_df(spark, pages, seed=42), cfg)
-    # simulate a pre-neg_keys checkpoint (delete the delta directory)
-    shutil.rmtree(os.path.join(ckpt, "neg_keys"), ignore_errors=True)
+    last = last_complete_round(cfg)
+    shutil.rmtree(os.path.join(ckpt, "neg_keys"))
     cfg2 = CrawlConfig(checkpoint_dir=ckpt, host_budget=BUDGET,
                        max_rounds=MAX_ROUNDS)
-    run_crawl(spark, pages_df(spark, N_PAGES, seed=42),
-              seeds_df(spark, pages, seed=42), robots_df(spark, pages, seed=42), cfg2)
-
-    _, _, oracle_templates = oracle_crawl(pages, seeds, robots)
-    got = {
-        (r["url"], r["stmt_idx"], r["template"])
-        for r in read_all_templates(spark, cfg2).collect()
-    }
-    want = {(r["url"], r["stmt_idx"], r["template"]) for r in oracle_templates}
-    assert got == want
+    with pytest.raises(FileNotFoundError, match="negative-cache keys"):
+        run_crawl(spark, pages_df(spark, N_PAGES, seed=42),
+                  seeds_df(spark, pages, seed=42),
+                  robots_df(spark, pages, seed=42), cfg2)
+    assert last_complete_round(cfg2) == last  # nothing was committed

@@ -117,6 +117,31 @@ def test_statement_filters_use_python_regex_semantics(spark):
     ]
 
 
+def test_hostile_nesting_statement_is_dropped_not_fatal(spark):
+    """A page whose statement nests 600 String.format calls (~19 KB, the
+    shape of perfbench/inputs.py:hostile_page) used to raise RecursionError
+    in the Python worker and fail the Spark job on every retry.  The parser
+    drops that statement now, so the page's normal statement is exactly
+    the output."""
+    inner = "requestId"
+    for i in range(600):
+        inner = f'String.format("a{i} %s", {inner} + "q")'
+    page = {
+        "url": "https://h.example.org/src/Hostile.java", "lang": "java",
+        "text": ("import org.slf4j.Logger;\npublic class Hostile {\n"
+                 "    public void run(int n) {\n"
+                 f"        log.info({inner});\n"
+                 '        log.info("kept {} items", n);\n    }\n}\n'),
+    }
+    df = spark.createDataFrame([page], "url string, text string, lang string")
+    got = _as_dicts(extract_templates(df, dedup=False))
+    assert got == sorted(process_page(page["url"], page["text"], page["lang"]),
+                         key=_key)
+    assert [(r["stmt_idx"], r["raw"], r["template"]) for r in got] == [
+        (1, 'log.info("kept {} items", n)', "kept {} items"),
+    ]
+
+
 def test_detect_vote_matches_core(spark, fixture_pages):
     """Native ``detect_vote`` (U1/U4 rule-vote mode, no UDF) ≡ the pure
     twin ``core.detect.detect_page``'s vote over every fixture page plus

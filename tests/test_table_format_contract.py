@@ -1,4 +1,4 @@
-"""Table-format seam contract, proved against BOTH implementations.
+"""Table-format seam contract, proved against both checkpoint layouts.
 
 The scheduler claims swapping the checkpoint format is a constructor
 argument (sources/table_format.py).  This file makes that claim testable:
@@ -6,10 +6,10 @@ argument (sources/table_format.py).  This file makes that claim testable:
 * the seam's documented semantics (snapshot overwrite, delta commit /
   retry idempotence, max_round pruning of uncommitted partitions, atomic
   commit marker) run parameterized over ``ParquetManifestFormat`` AND
-  ``CommitLogFormat``;
-* a full crawl + kill + resume runs under ``CommitLogFormat`` and must
-  produce the IDENTICAL frontier, template set, and pop order as the
-  parquet-format crawl of the same corpus — the format never leaks into
+  ``BucketedParquetFormat``;
+* a full crawl + kill + resume runs under ``BucketedParquetFormat`` and
+  must produce the IDENTICAL frontier and template set as the
+  parquet-format crawl of the same corpus — the layout never leaks into
   crawl semantics.
 """
 
@@ -33,13 +33,11 @@ from logtemplatecrawler_spark.sources.fixtures import (
 )
 from logtemplatecrawler_spark.sources.table_format import (
     BucketedParquetFormat,
-    CommitLogFormat,
     ParquetManifestFormat,
     detect_format,
-    require_format,
 )
 
-FORMATS = [ParquetManifestFormat, CommitLogFormat, BucketedParquetFormat]
+FORMATS = [ParquetManifestFormat, BucketedParquetFormat]
 
 
 @pytest.fixture(params=FORMATS, ids=lambda c: c.__name__)
@@ -113,16 +111,12 @@ def test_commit_marker(spark, fmt, tmp_path):
 
 
 def test_crashed_delta_write_is_invisible(spark, fmt, tmp_path):
-    """A delta write that died mid-flight (staging dir with real parquet
-    data for the parquet format; an unlogged data dir for the commit-log
-    format) must be invisible to every reader — the atomic-publish
-    guarantee the out-of-protocol neg-cache backfill relies on."""
+    """A delta write that died mid-flight (a staging dir with real parquet
+    data) must be invisible to every reader — the atomic-publish
+    guarantee."""
     base = str(tmp_path / "d")
     fmt.write_delta(_df(spark, [("a", 1)]), base, 0)
-    if isinstance(fmt, ParquetManifestFormat):
-        crashed = os.path.join(base, ".staging-round=0001")
-    else:
-        crashed = os.path.join(base, "r0001_9999")
+    crashed = os.path.join(base, ".staging-round=0001")
     _df(spark, [("ghost", 9)]).write.parquet(crashed)
     assert fmt.delta_rounds(base) == [0]
     got = sorted(map(tuple, fmt.read_deltas(spark, base, max_round=9).collect()))
@@ -138,10 +132,10 @@ def test_detect_format(tmp_path):
     pq.mkdir(parents=True)
     ParquetManifestFormat().commit_round(str(pq))
     assert isinstance(detect_format(str(tmp_path / "pq")), ParquetManifestFormat)
-    cl = tmp_path / "cl" / "round=0000"
-    cl.mkdir(parents=True)
-    CommitLogFormat().commit_round(str(cl))
-    assert isinstance(detect_format(str(tmp_path / "cl")), CommitLogFormat)
+    # a round killed before its commit marker is still a checkpoint
+    (tmp_path / "crashed" / "round=0000" / "templates").mkdir(parents=True)
+    assert isinstance(detect_format(str(tmp_path / "crashed")),
+                      ParquetManifestFormat)
 
 
 def test_bucketed_snapshot_roundtrip_and_reregister(spark, tmp_path):
@@ -224,74 +218,23 @@ def test_detect_format_from_delta_markers(spark, tmp_path):
     """A checkpoint that crashed before its first round commit still has
     delta-dir markers; auto-detection must read them instead of silently
     defaulting (ADVICE r03)."""
-    cl = str(tmp_path / "cl")
-    CommitLogFormat().write_delta(_df(spark, [("a", 1)]), os.path.join(cl, "neg_keys"), 0)
-    assert isinstance(detect_format(cl), CommitLogFormat)
     pq = str(tmp_path / "pq")
     ParquetManifestFormat().write_delta(
         _df(spark, [("a", 1)]), os.path.join(pq, "frontier_deltas"), 0)
     assert isinstance(detect_format(pq), ParquetManifestFormat)
 
 
-def test_require_format_refuses_unrecognized_nonempty(tmp_path):
+def test_detect_format_refuses_unrecognized_nonempty(tmp_path):
     """Strict resume detection: fresh dir → None; junk-filled dir → error."""
     fresh = tmp_path / "fresh"
     fresh.mkdir()
-    assert require_format(str(fresh)) is None
-    assert require_format(str(tmp_path / "absent")) is None
+    assert detect_format(str(fresh)) is None
+    assert detect_format(str(tmp_path / "absent")) is None
     junk = tmp_path / "junk"
     junk.mkdir()
     (junk / "whatever.txt").write_text("x")
-    with pytest.raises(ValueError, match="no recognizable"):
-        require_format(str(junk))
-
-
-def test_commitlog_version_retention(spark, tmp_path):
-    """Overwrites retain the previous version's files (a concurrent reader
-    holding the just-superseded pointer still reads), and expire_versions
-    is the offline history GC."""
-    fmt = CommitLogFormat()  # default retained_versions=2
-    path = str(tmp_path / "snap")
-    fmt.write_snapshot(_df(spark, [("a", 1)]), path)
-    old_data = fmt._resolve(path)  # a reader resolves the v0 pointer...
-    fmt.write_snapshot(_df(spark, [("b", 2)]), path)
-    # ...then the writer swaps to v1: the reader's resolved files must
-    # still be present and readable (snapshot isolation across one swap)
-    assert os.path.isdir(old_data)
-    assert [tuple(r) for r in spark.read.parquet(old_data).collect()] == [("a", 1)]
-    # current pointer reads the new version
-    assert [tuple(r) for r in fmt.read_snapshot(spark, path).collect()] == [("b", 2)]
-    # a third overwrite pushes v0 out of the retention window (keep 2)
-    fmt.write_snapshot(_df(spark, [("c", 3)]), path)
-    assert not os.path.isdir(old_data)
-    assert len(fmt._version_dirs(path)) == 2
-    # offline expiry trims to the newest version only
-    assert fmt.expire_versions(path, keep=1) == 1
-    assert len(fmt._version_dirs(path)) == 1
-    assert [tuple(r) for r in fmt.read_snapshot(spark, path).collect()] == [("c", 3)]
-
-
-def test_commitlog_expiry_survives_orphan_version(spark, tmp_path):
-    """A crash between write_snapshot's parquet write and its meta swap
-    leaves an ORPHAN vNNNNNN that is numerically newest while _meta.json
-    still points at the older live version.  expire_versions (and the
-    inline retention GC) must expire relative to the META POINTER — a
-    numeric-order GC would delete the live committed snapshot and keep the
-    orphan, destroying the frontier (ADVICE r04, repro'd)."""
-    fmt = CommitLogFormat()
-    path = str(tmp_path / "snap")
-    fmt.write_snapshot(_df(spark, [("live", 1)]), path)
-    live_dir = fmt._resolve(path)
-    # simulate the crash window: v000001 data written, meta never swapped
-    _df(spark, [("orphan", 2)]).write.parquet(os.path.join(path, "v000001"))
-    assert fmt.expire_versions(path, keep=1) == 1  # the orphan, not the live dir
-    assert os.path.isdir(live_dir)
-    assert [tuple(r) for r in fmt.read_snapshot(spark, path).collect()] == [("live", 1)]
-    # the inline retention GC takes the same guard: with the orphan back in
-    # place, an overwrite (retained_versions=2) keeps live + current
-    _df(spark, [("orphan", 2)]).write.parquet(os.path.join(path, "v000001"))
-    fmt.write_snapshot(_df(spark, [("next", 3)]), path)
-    assert [tuple(r) for r in fmt.read_snapshot(spark, path).collect()] == [("next", 3)]
+    with pytest.raises(ValueError, match="no checkpoint entries"):
+        detect_format(str(junk))
 
 
 def test_crawl_config_validation(tmp_path):
@@ -319,7 +262,7 @@ def test_delta_rejects_reserved_round_column(spark, fmt, tmp_path):
         fmt.write_delta(df, str(tmp_path / "d"), 0)
 
 
-# -- the swap proof: full crawl + resume under the second format -------------
+# -- the swap proof: full crawl + resume under the bucketed layout -----------
 
 N_PAGES = 80
 BUDGET = 2
@@ -362,11 +305,12 @@ def test_compact_checkpoint(spark, tmp_path):
     """Offline compaction folds frontier AND neg-key deltas into snapshots
     at the last round, prunes them, expires superseded history, leaves the
     reconstructed state identical, and the crawl resumes cleanly
-    afterwards — both formats."""
+    afterwards — both layouts."""
     from logtemplatecrawler_spark.crawl.scheduler import load_neg_keys
 
     pages = generate_pages(N_PAGES, seed=7)
-    for fmt_cls, sub in [(ParquetManifestFormat, "pq"), (CommitLogFormat, "cl")]:
+    for fmt_cls, sub in [(ParquetManifestFormat, "pq"),
+                         (BucketedParquetFormat, "bk")]:
         ckpt = str(tmp_path / sub)
         cfg = _crawl(spark, pages, ckpt, fmt_cls(), max_rounds=4)
         last = last_complete_round(cfg)
@@ -412,32 +356,16 @@ def test_crawl_identical_across_formats_with_resume(spark, tmp_path):
     pages = generate_pages(N_PAGES, seed=7)
 
     ref_cfg = _crawl(spark, pages, str(tmp_path / "pq"), ParquetManifestFormat())
-
-    # commit-log format: kill after 2 rounds, then resume to completion —
-    # exercises load_frontier MERGE-on-read, neg-cache reads, and the
-    # commit marker under the second format
-    clog = str(tmp_path / "clog")
-    _crawl(spark, pages, clog, CommitLogFormat(), max_rounds=2)
-    cl_cfg = _crawl(spark, pages, clog, CommitLogFormat())
-
     last_ref = last_complete_round(ref_cfg)
-    last_cl = last_complete_round(cl_cfg)
-    assert last_cl == last_ref
-
     a = {(r["url"], r["state"], r["priority"], r["depth"])
          for r in load_frontier(spark, ref_cfg, last_ref).collect()}
-    b = {(r["url"], r["state"], r["priority"], r["depth"])
-         for r in load_frontier(spark, cl_cfg, last_cl).collect()}
-    assert a == b
-
     ta = {(r["url"], r["stmt_idx"], r["template"], r["round"])
           for r in read_all_templates(spark, ref_cfg).collect()}
-    tb = {(r["url"], r["stmt_idx"], r["template"], r["round"])
-          for r in read_all_templates(spark, cl_cfg).collect()}
-    assert ta == tb
 
-    # bucketed format: same kill-after-2 + resume drill — the exchange-free
-    # MERGE-on-read over bucketed snapshots must not leak into semantics
+    # bucketed format: kill after 2 rounds, then resume to completion —
+    # exercises load_frontier MERGE-on-read, neg-cache reads, and the
+    # commit marker; the exchange-free MERGE-on-read over bucketed
+    # snapshots must not leak into semantics
     bk = str(tmp_path / "bk")
     _crawl(spark, pages, bk, BucketedParquetFormat(n_buckets=4), max_rounds=2)
     bk_cfg = _crawl(spark, pages, bk, BucketedParquetFormat(n_buckets=4))
